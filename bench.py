@@ -33,7 +33,8 @@ spec oracle over a reference-class query set on q1's index
 scripts/bench_rank_identity.py and BENCH/BASELINE.md).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_DOCS (default 100000).
+SPARK_GRAFT_CPUS (default: the CPUs this process may run on,
+``os.sched_getaffinity``), SPARK_GRAFT_BENCH_DOCS (default 100000).
 """
 
 from __future__ import annotations
@@ -79,7 +80,9 @@ class _Meter:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get(
+        "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))
+    ))
     bench_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 

@@ -8,7 +8,7 @@ with k1 = 1.2, b = 0.75 (query.c:82-83) and the reference's quirks
 
 - ``N``    = total number of documents (query.c:47)
 - ``d_avr`` = sum(doc_len) / (N - 1)   — note N-1, a reference quirk
-  (query.c:48)
+  (query.c:48); ``inf`` for N <= 1
 - ``df``   = posting-list length of the term
 - ``|d|``  = the reference's ``size_of_doc`` = len(url) + 1 + len(body)
 - IDF may be NEGATIVE (df > N/2); there is no floor
@@ -38,5 +38,11 @@ def bm25(tf, df, doc_len, n_docs: int, d_avr: float) -> np.ndarray:
 
 
 def d_avr(sum_doc_len: int, n_docs: int) -> float:
-    """Reference average doc length: sum / (N - 1) (query.c:48)."""
+    """Reference average doc length: sum / (N - 1) (query.c:48).
+
+    N <= 1 gives ``inf``, what the reference's double division gives
+    for a one-doc corpus: every |d|/d_avr term is then 0 and scores
+    stay finite.  Every serving surface takes d_avr from here."""
+    if n_docs <= 1:
+        return float("inf")
     return float(sum_doc_len) / float(n_docs - 1)

@@ -20,7 +20,8 @@ Scale notes: a batch of Q queries touches at most Q x terms-per-query
 distinct keys; the decode stage is identical to single-query serving
 (chunk rows stay in their scan partitions), and the postings->query
 fan-out happens AFTER decode via a broadcast of the (query_id, key,
-weight) table (Q x terms rows — tiny for any realistic batch).  The
+weight) table (Q x terms rows — tiny for any realistic batch, collected
+once and fed back as a local relation, so the tokenizer runs once).  The
 per-query top-k window partitions by query_id — Q-way parallel, k-row
 output per partition.
 
@@ -32,24 +33,29 @@ round_digits is set, like topk_bm25).
 
 from __future__ import annotations
 
+import collections
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-import numpy as np
-
 from invertedindexbuilder_spark import LEXICON_KEY_LEN
+from invertedindexbuilder_spark.functions.bm25 import d_avr
 from invertedindexbuilder_spark.operators.query_exec import (
     DOCLEN_PUSH_CAP,
-    _DECODED_SCHEMA,
+    _decoded_frame,
     _doc_lens_for,
+    _doc_lens_frame,
     _lookup_chunk_meta,
-    _match_keys,
+    _merged_rows,
+    _winner_rows,
     bm25_expr,
     decode_matched_rows,
     decode_matched_rows_bmw,
     tokenize_query,
 )
+from invertedindexbuilder_spark.session import local_frame
 
 _QKEYS_SCHEMA = "query_id long, key string, weight int"
 
@@ -93,6 +99,15 @@ def _query_keys(queries: DataFrame, strict: bool) -> DataFrame:
     )
 
 
+def _qkeys_frame(spark: SparkSession, rows) -> DataFrame:
+    """Collected (query_id, key, weight) rows as a local frame."""
+    return local_frame(
+        spark,
+        {c: [r[c] for r in rows] for c in ("query_id", "key", "weight")},
+        _QKEYS_SCHEMA,
+    )
+
+
 def topk_bm25_batch(
     spark: SparkSession,
     index: DataFrame,
@@ -126,55 +141,43 @@ def topk_bm25_batch(
     if mode not in ("and", "or"):
         raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
     n_docs = int(stats["n_docs"])
-    davr = float(stats["sum_doc_len"]) / float(n_docs - 1)
+    davr = d_avr(stats["sum_doc_len"], n_docs)
     chunked = "salt" in index.columns
 
-    winners: dict | None = None
-
-    def _resolve(keys: dict) -> DataFrame:
+    def _resolve(keys: list[str]) -> tuple[DataFrame, dict | None]:
         """Matched index rows for a key set, collision winners applied
-        (same semantics as lookup_index_rows / lookup_chunk_rows)."""
+        (same semantics as lookup_index_rows / lookup_chunk_rows), plus
+        the chunk lookup's per-key winner metadata (None when merged)."""
         if chunked:
             # r8: the single-query metadata lookup — ONE payload-free
             # collect derives collision winners + per-key stats on the
-            # driver and joins the winner set back as a broadcast
-            # literal (one payload-bearing scan; the old distributed
-            # row_number winner needed a shuffle for the same answer,
-            # and the stats now feed the candidate pruning below)
-            return _lookup_chunk_meta(index, list(keys), strict)[0]
-        m = _match_keys(index, keys, strict)
-        if strict:
-            winner = m.groupBy("key").agg(F.max("term").alias("term"))
-            return m.join(F.broadcast(winner), ["key", "term"])
-        return m
+            # driver and the winners re-enter the plan as literals (one
+            # payload-bearing scan; the old distributed row_number
+            # winner needed a shuffle for the same answer, and the
+            # stats now feed the candidate pruning below)
+            return _lookup_chunk_meta(index, keys, strict)
+        return _merged_rows(index, {k: 1 for k in keys}, strict), None
 
-    # qkeys is deliberately NOT cached: it re-derives from the queries
-    # table in one narrow pass wherever the plan needs it (a cache here
-    # would pin executor storage per batch in a long-running server)
-    qkeys = _query_keys(queries, strict)
     # collect the whole (query_id, key, weight) map — Q x terms rows,
-    # tiny for any realistic batch; the same single job the old
-    # distinct-keys collect ran, now also feeding the driver-side
-    # found-count and candidate-pruning decisions
-    qk_rows = qkeys.collect()
-    distinct_keys = {r["key"]: 1 for r in qk_rows}
-    if not distinct_keys:
-        return spark.createDataFrame(
-            [], schema="query_id long, doc_id long, score double, rank int"
+    # tiny for any realistic batch.  It feeds the driver-side
+    # found-count and candidate-pruning decisions, and re-enters the
+    # plan as a local relation, so the tokenizer runs once per batch
+    qk_rows = _query_keys(queries, strict).collect()
+    if not qk_rows:
+        return local_frame(
+            spark,
+            {c: [] for c in ("query_id", "doc_id", "score", "rank")},
+            "query_id long, doc_id long, score double, rank int",
         )
-    if chunked:
-        matched, winners = _lookup_chunk_meta(
-            index, list(distinct_keys), strict
-        )
-    else:
-        matched = _resolve(distinct_keys)
+    qkeys = _qkeys_frame(spark, qk_rows)
+    keys = list(dict.fromkeys(r["key"] for r in qk_rows))
+    matched, winners = _resolve(keys)
 
     docs_join = docs.select("doc_id", "doc_len")
     decoded = None
     found_local: dict[int, int] | None = None
     if winners is not None:
         # per-query found counts, free from the lookup metadata
-        found_local = {}
         by_q: dict[int, list[str]] = {}
         for r in qk_rows:
             if r["key"] in winners:
@@ -200,25 +203,10 @@ def topk_bm25_batch(
             and 0 < cand_total <= DOCLEN_PUSH_CAP
             and skippable >= floor
         ):
-            def rows_for(keys: list[str]) -> DataFrame:
-                wdf = spark.createDataFrame(
-                    [
-                        (k, winners[k]["term"], winners[k]["term_df"])
-                        for k in keys
-                    ],
-                    schema="key string, term string, term_df long",
-                )
-                return _match_keys(index, {k: 1 for k in keys}, strict).join(
-                    F.broadcast(wdf), ["key", "term"]
-                )
-
-            rare_rows_df = decode_matched_rows(
-                rows_for(rare_keys).withColumn("weight", F.lit(1))
-            )
-            rrows = rare_rows_df.collect()  # <= cand_total rows
-            cand_by_key: dict[str, list[int]] = {}
-            for r in rrows:
-                cand_by_key.setdefault(r["key"], []).append(r["doc_id"])
+            rrows = decode_matched_rows(
+                _winner_rows(index, winners, rare_keys, strict)
+                .withColumn("weight", F.lit(1))
+            ).collect()  # <= cand_total rows
             all_cands = np.unique(
                 np.fromiter(
                     (r["doc_id"] for r in rrows), np.int64, count=len(rrows)
@@ -231,49 +219,14 @@ def topk_bm25_batch(
             # rare list and dies to the all-keys filter), and doc_lens
             # for the whole batch come from one In-pushed scan instead
             # of a corpus-scale doc_len join.
-            import collections
-
             other_dec = decode_matched_rows_bmw(
-                rows_for(other_keys).withColumn("weight", F.lit(1)),
+                _winner_rows(index, winners, other_keys, strict)
+                .withColumn("weight", F.lit(1)),
                 all_cands, float("inf"), collections.defaultdict(float),
                 n_docs=1 << 62, min_doc_len=1.0, davr=1.0,
             )
-            rare_local = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "key": [r["key"] for r in rrows],
-                        "df": np.fromiter(
-                            (r["df"] for r in rrows), np.int64,
-                            count=len(rrows),
-                        ),
-                        "weight": np.ones(len(rrows), dtype=np.int32),
-                        "doc_id": np.fromiter(
-                            (r["doc_id"] for r in rrows), np.int64,
-                            count=len(rrows),
-                        ),
-                        "tf": np.fromiter(
-                            (r["tf"] for r in rrows), np.int64,
-                            count=len(rrows),
-                        ),
-                    }
-                ),
-                schema=_DECODED_SCHEMA,
-            )
-            decoded = rare_local.unionByName(other_dec)
-            dl_map = _doc_lens_for(docs, all_cands)
-            docs_join = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_id": np.fromiter(
-                            dl_map.keys(), np.int64, count=len(dl_map)
-                        ),
-                        "doc_len": np.fromiter(
-                            dl_map.values(), np.float64, count=len(dl_map)
-                        ),
-                    }
-                ),
-                schema="doc_id long, doc_len double",
-            )
+            decoded = _decoded_frame(spark, rrows).unionByName(other_dec)
+            docs_join = _doc_lens_frame(spark, _doc_lens_for(docs, all_cands))
 
     if decoded is None:
         # decode each matched row ONCE (weight=1 placeholder; the
@@ -297,8 +250,11 @@ def topk_bm25_batch(
         # row has df >= 1), so the decode pipeline runs exactly once;
         # with the chunked lookup the counts are already on the driver.
         if found_local is not None:
-            found = spark.createDataFrame(
-                list(found_local.items()), schema="query_id long, _need long"
+            found = local_frame(
+                spark,
+                {"query_id": list(found_local),
+                 "_need": list(found_local.values())},
+                "query_id long, _need long",
             )
         else:
             found = (
@@ -316,22 +272,22 @@ def topk_bm25_batch(
         # per-query NOT-terms: decode each excluded key once for the
         # whole batch, fan out to (query_id, doc_id) exclusion pairs,
         # anti-join AFTER the per-(query, doc) aggregate
-        ex_qkeys = _query_keys(
+        ex_rows = _query_keys(
             queries.select(
                 "query_id",
                 F.coalesce(F.col(exclude_col), F.lit("")).alias("text"),
             ),
             strict,
-        )
-        ex_keys = {
-            r["key"]: 1 for r in ex_qkeys.select("key").distinct().collect()
-        }
-        if ex_keys:
+        ).collect()
+        if ex_rows:
+            ex_keys = list(dict.fromkeys(r["key"] for r in ex_rows))
+            ex_matched = _resolve(ex_keys)[0]
             ex_pairs = (
-                decode_matched_rows(
-                    _resolve(ex_keys).withColumn("weight", F.lit(1))
+                decode_matched_rows(ex_matched.withColumn("weight", F.lit(1)))
+                .join(
+                    F.broadcast(_qkeys_frame(spark, ex_rows).drop("weight")),
+                    "key",
                 )
-                .join(F.broadcast(ex_qkeys.select("query_id", "key")), "key")
                 .select("query_id", "doc_id")
                 .distinct()
             )

@@ -20,12 +20,17 @@ Replicated reference semantics (SURVEY §5.5):
 
 Scale notes: the per-term index rows stay distributed (a stopword row
 at 10^12 docs is GBs — never collected; driver metadata is O(#query
-terms) scalars); the docs join for doc_len shuffles on doc_id and
-benefits from bucketing the docs table by doc_id; stats is a broadcast
-scalar pair.  Conjunctive queries prune two-sidedly with the rarest
-term's doc range (the nextGEQ skip analog): whole chunks above the
-bound leave the plan, boundary chunks truncate blocks in the decoder;
-at scale (and_prune auto) the rarest list's decoded doc_ids become an
+terms) scalars).  Per-query driver values enter the plan as literals
+(the key -> weight and winner term -> term_df maps, pushed term
+predicates) or as Arrow-backed local relations (session.local_frame),
+never as a Python-parallelized frame, whose every read runs a
+defaultParallelism-task job on Python workers (0.2-0.5 s apiece on a
+4-core host; BENCH/PLANS.md).  The docs join for doc_len shuffles on
+doc_id and benefits from bucketing the docs table by doc_id; stats is
+a broadcast scalar pair.  Conjunctive queries prune two-sidedly with
+the rarest term's doc range (the nextGEQ skip analog): whole chunks
+above the bound leave the plan, boundary chunks truncate blocks in the
+decoder; at scale (and_prune auto) the rarest list's decoded doc_ids become an
 explicit candidate set and every other list decodes candidate-bearing
 blocks ONLY (_try_candidate_and_decode — the distributed form of the
 local session's progressive intersection).
@@ -52,16 +57,18 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from invertedindexbuilder_spark import BM25_B, BM25_K1, LEXICON_KEY_LEN
+from invertedindexbuilder_spark.functions.bm25 import d_avr
 from invertedindexbuilder_spark.functions.bm25 import idf as _idf
 from invertedindexbuilder_spark.functions.compress import (
     decode_blocks_pruned,
     decode_blocks_selected,
 )
+from invertedindexbuilder_spark.session import local_frame
 
 _QUERY_TOKEN_RE = re.compile(r"[A-Za-z0-9]+")
 
@@ -206,28 +213,54 @@ def _key_weights(terms: list[str], strict: bool) -> dict[str, int]:
     return keys
 
 
+def _literal_map(pairs) -> Column:
+    """A literal map column over driver-side (key, value) pairs."""
+    return F.create_map(*[F.lit(x) for kv in pairs for x in kv])
+
+
 def _match_keys(
     df: DataFrame, weights: dict[str, int], strict: bool
 ) -> DataFrame:
     """Shared Q2/D5 key matching over any term-keyed table (merged
-    index rows or chunk rows): broadcast the (key, weight) pairs; in
-    strict mode push term-range predicates (key..key+0x7f) into the
-    scan and join on the 14-byte prefix.  Encoded ONCE so the merged
-    and chunked serving paths cannot diverge on lexicon semantics."""
-    spark = df.sparkSession
-    keys_df = spark.createDataFrame(
-        list(weights.items()), schema="key string, weight int"
+    index rows or chunk rows), adding (key, weight).  The term
+    predicate pushes into the scan: term ranges (key..key+0x7f) in
+    strict mode, an In-list of the keys otherwise.  Each row's key (its
+    14-byte prefix in strict mode, the term otherwise) then goes
+    through a LITERAL key -> weight map, and rows the map lacks drop.
+    The weights stay in the plan as a literal — no driver-built frame,
+    so matching runs no job of its own (BENCH/PLANS.md).  Encoded ONCE
+    so the merged and chunked serving paths cannot diverge on lexicon
+    semantics."""
+    if strict:
+        prune = None
+        for k in weights:
+            cond = F.col("term").between(F.lit(k), F.lit(k + "\x7f"))
+            prune = cond if prune is None else (prune | cond)
+        df = df.filter(prune)
+        key = F.substring(F.col("term"), 1, LEXICON_KEY_LEN)
+    else:
+        df = df.filter(F.col("term").isin(list(weights)))
+        key = F.col("term")
+    return (
+        df.withColumn("key", key)
+        .withColumn("weight", _literal_map(weights.items())[F.col("key")])
+        .filter(F.col("weight").isNotNull())
     )
-    if not strict:
-        return df.join(F.broadcast(keys_df), F.col("term") == F.col("key"))
-    prune = None
-    for k in weights:
-        cond = F.col("term").between(F.lit(k), F.lit(k + "\x7f"))
-        prune = cond if prune is None else (prune | cond)
-    return df.filter(prune).join(
-        F.broadcast(keys_df),
-        F.substring(F.col("term"), 1, LEXICON_KEY_LEN) == F.col("key"),
-    )
+
+
+def _merged_rows(
+    index: DataFrame, weights: dict[str, int], strict: bool
+) -> DataFrame:
+    """Merged index rows for ``weights``' keys, at most one per key:
+    in strict mode the byte-wise LAST matching term wins (D5).  The
+    winner is a tiny agg + broadcast join back — a row_number window
+    here would EXCHANGE the matched rows incl. their payloads (GBs for
+    a stopword term) just to rank a handful of collision candidates."""
+    matched = _match_keys(index, weights, strict)
+    if strict:
+        winner = matched.groupBy("key").agg(F.max("term").alias("term"))
+        matched = matched.join(F.broadcast(winner), ["key", "term"])
+    return matched
 
 
 def lookup_index_rows(
@@ -244,15 +277,29 @@ def lookup_index_rows(
         return index.limit(0).withColumn("key", F.lit("")).withColumn(
             "weight", F.lit(0)
         )
-    matched = _match_keys(index, weights, strict)
-    if strict:
-        # collision winner (last term in order, D5) via a tiny agg +
-        # broadcast join back — a row_number window here would EXCHANGE
-        # the matched rows incl. their payloads (GBs for a stopword
-        # term) just to rank a handful of collision candidates.
-        winner = matched.groupBy("key").agg(F.max("term").alias("term"))
-        matched = matched.join(F.broadcast(winner), ["key", "term"])
-    return matched
+    return _merged_rows(index, weights, strict)
+
+
+def _winner_rows(
+    df: DataFrame, winners: dict, keys: list[str], strict: bool
+) -> DataFrame:
+    """Rows of the term-keyed ``df`` (chunk rows or their metadata) for
+    ``keys``, restricted to each key's collision winner (D5) from the
+    chunk lookup's ``winners`` and carrying the full-term ``term_df``.
+    The winning terms push into the scan as an In-list and term_df
+    comes from a literal term -> term_df map, so no driver-built frame
+    or join enters the plan.  The shared tail of every chunk-table
+    lookup (single query, pruning passes, facets, batch)."""
+    return _match_keys(
+        df.filter(F.col("term").isin([winners[k]["term"] for k in keys])),
+        {k: winners[k]["weight"] for k in keys},
+        strict,
+    ).withColumn(
+        "term_df",
+        _literal_map(
+            (winners[k]["term"], winners[k]["term_df"]) for k in keys
+        )[F.col("term")].cast("long"),
+    )
 
 
 _DECODED_SCHEMA = T.StructType(
@@ -400,11 +447,29 @@ def _doc_lens_for(
         )
         rows = src.collect()
     else:
-        ids_df = docs.sparkSession.createDataFrame(
-            [(int(x),) for x in ids], "doc_id long"
-        )
+        ids_df = local_frame(docs.sparkSession, {"doc_id": ids}, "doc_id long")
         rows = base.join(F.broadcast(ids_df), "doc_id").collect()
     return {r["doc_id"]: float(r["doc_len"]) for r in rows}
+
+
+def _decoded_frame(spark: SparkSession, rows) -> DataFrame:
+    """Collected posting rows as a local ``_DECODED_SCHEMA`` frame."""
+    return local_frame(
+        spark,
+        {c: [r[c] for r in rows] for c in _DECODED_SCHEMA.fieldNames()},
+        _DECODED_SCHEMA,
+    )
+
+
+def _doc_lens_frame(spark: SparkSession, dl_map: dict) -> DataFrame:
+    """A :func:`_doc_lens_for` map as a local (doc_id, doc_len) frame.
+    doc_len is a double holding exactly the source values: the scorer
+    casts a long doc_len to double anyway, so scores are bit-identical."""
+    return local_frame(
+        spark,
+        {"doc_id": list(dl_map), "doc_len": list(dl_map.values())},
+        "doc_id long, doc_len double",
+    )
 
 
 def _driver_contribs(
@@ -434,7 +499,6 @@ def _driver_contribs(
 
 
 def _chunk_ioprune_filter(
-    spark: SparkSession,
     chunks: DataFrame,
     winners: dict,
     strict: bool,
@@ -474,23 +538,14 @@ def _chunk_ioprune_filter(
     bytes (pushed predicate + row-group/page stats), where the
     decode-level rule cannot (payload and metadata share rows).
     """
-    weights = {k: winners[k]["weight"] for k in heavy_keys}
-    meta_scan = _match_keys(
-        chunks.select(
-            "term",
-            "first_doc_id",
-            F.element_at("last_doc_ids", -1).alias("last_doc"),
-            F.array_max("max_tf").alias("cmt"),
-        ),
-        weights,
-        strict,
-    )
-    wdf = spark.createDataFrame(
-        [(k, winners[k]["term"]) for k in heavy_keys],
-        schema="key string, term string",
+    meta_scan = chunks.select(
+        "term",
+        "first_doc_id",
+        F.element_at("last_doc_ids", -1).alias("last_doc"),
+        F.array_max("max_tf").alias("cmt"),
     )
     rows = (
-        meta_scan.join(F.broadcast(wdf), ["key", "term"])
+        _winner_rows(meta_scan, winners, heavy_keys, strict)
         .select("key", "first_doc_id", "last_doc", "cmt")
         .limit(OR_IOPRUNE_META_CAP + 1)
         .collect()
@@ -892,47 +947,8 @@ def _try_bmw_or_decode(
         # inner-join parity.  Saves 2 jobs + one candidate-scan read
         # per pruned query; at 1M docs the forced-BMW entry's fixed
         # overhead is mostly these jobs.
-        dec_pdf = pd.DataFrame(
-            {
-                "key": [r["key"] for r in lrows] + [r["key"] for r in hrows],
-                "df": np.fromiter(
-                    (r["df"] for r in lrows + hrows), np.int64,
-                    count=len(lrows) + len(hrows),
-                ),
-                "weight": np.fromiter(
-                    (r["weight"] for r in lrows + hrows), np.int32,
-                    count=len(lrows) + len(hrows),
-                ),
-                "doc_id": np.fromiter(
-                    (r["doc_id"] for r in lrows + hrows), np.int64,
-                    count=len(lrows) + len(hrows),
-                ),
-                "tf": np.fromiter(
-                    (r["tf"] for r in lrows + hrows), np.int64,
-                    count=len(lrows) + len(hrows),
-                ),
-            }
-        )
-        decoded = F.broadcast(
-            spark.createDataFrame(dec_pdf, schema=_DECODED_SCHEMA)
-        )
-        docs_narrow = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": np.fromiter(
-                        dl_map.keys(), np.int64, count=len(dl_map)
-                    ),
-                    # double, holding exactly the source values: the
-                    # scorer casts a long doc_len to double anyway, so
-                    # the computed scores are bit-identical
-                    "doc_len": np.fromiter(
-                        dl_map.values(), np.float64, count=len(dl_map)
-                    ),
-                }
-            ),
-            schema="doc_id long, doc_len double",
-        )
-        return decoded, docs_narrow
+        decoded = F.broadcast(_decoded_frame(spark, lrows + hrows))
+        return decoded, _doc_lens_frame(spark, dl_map)
 
     total_ub = sum(full_ubs.values())
     others_ub = {key: total_ub - ub for key, ub in full_ubs.items()}
@@ -1030,7 +1046,7 @@ def topk_bm25(
         )
 
     n_docs = int(stats["n_docs"])
-    davr = float(stats["sum_doc_len"]) / float(n_docs - 1)  # reference N-1 quirk
+    davr = d_avr(stats["sum_doc_len"], n_docs)
     auto_or = or_prune == "auto"
     if auto_or:
         # provisional corpus floor; the real (posting-volume) decision
@@ -1050,11 +1066,7 @@ def topk_bm25(
     weights = _key_weights(terms, strict)
 
     def rows_for(keys: list[str]) -> DataFrame:
-        m = _match_keys(index, {k: weights[k] for k in keys}, strict)
-        if strict:
-            winner = m.groupBy("key").agg(F.max("term").alias("term"))
-            m = m.join(F.broadcast(winner), ["key", "term"])
-        return m
+        return _merged_rows(index, {k: weights[k] for k in keys}, strict)
 
     min_doc, max_doc = 0, None
     n_keys = None
@@ -1070,7 +1082,7 @@ def topk_bm25(
         ).collect()
         n_keys = len(meta)
         if n_keys == 0:
-            return spark.createDataFrame([], schema="doc_id long, score double")
+            return _empty_topk(spark)
         rare = min(meta, key=lambda r: r["df"])
         if rare["df"] <= prune_collect_limit:
             max_doc = int(rare["last_doc"])
@@ -1134,8 +1146,10 @@ def _lookup_chunk_meta(
     per-(key, term) stats to the driver — O(#keys x collision-set)
     rows — where the last-in-term-order collision winner (D5), the
     full-term df, doc-range bound, and list-wide max tf are all
-    derived.  The winner set joins back as a broadcast LITERAL, so the
-    final plan holds exactly one payload-bearing chunk scan (pinned by
+    derived.  The winner set re-enters the plan as literals (a pushed
+    term In-list plus a term -> term_df map, :func:`_winner_rows`), so
+    the final plan holds exactly one payload-bearing chunk scan, no
+    join and no driver-built frame (pinned by
     test_plan_shape.test_chunk_lookup_single_payload_scan) and the
     AND/OR pruning decisions downstream need NO further aggregate jobs
     (r3 VERDICT: the pruned chunk table was scanned twice per lookup
@@ -1181,15 +1195,7 @@ def _lookup_chunk_meta(
             }
     if not winners:
         return empty, {}
-    spark = chunks.sparkSession
-    winner_df = spark.createDataFrame(
-        [(k, w["term"], w["term_df"]) for k, w in winners.items()],
-        schema="key string, term string, term_df long",
-    )
-    matched = _match_keys(chunks, weights, strict).join(
-        F.broadcast(winner_df), ["key", "term"]
-    )
-    return matched, winners
+    return _winner_rows(chunks, winners, list(winners), strict), winners
 
 
 def lookup_chunk_rows(
@@ -1269,7 +1275,7 @@ def topk_bm25_chunked(
         )
 
     n_docs = int(stats["n_docs"])
-    davr = float(stats["sum_doc_len"]) / float(n_docs - 1)
+    davr = d_avr(stats["sum_doc_len"], n_docs)
     if or_prune == "auto":
         # posting-volume rule, free here: the single-scan lookup
         # already collected every matched term's full df
@@ -1318,14 +1324,7 @@ def topk_bm25_chunked(
         on the shared ``matched`` frame keeps every term's range in
         the pushed filter; the key restriction only applies after the
         payloads are already read)."""
-        w = {k: winners[k]["weight"] for k in keys}
-        wdf = spark.createDataFrame(
-            [(k, winners[k]["term"], winners[k]["term_df"]) for k in keys],
-            schema="key string, term string, term_df long",
-        )
-        return _match_keys(chunks, w, strict).join(
-            F.broadcast(wdf), ["key", "term"]
-        )
+        return _winner_rows(chunks, winners, keys, strict)
 
     min_doc, max_doc = 0, None
     n_keys = None
@@ -1333,7 +1332,7 @@ def topk_bm25_chunked(
     if mode == "and":
         n_keys = len(winners)
         if n_keys == 0:
-            return spark.createDataFrame([], schema="doc_id long, score double")
+            return _empty_topk(spark)
         rare_key, rare = min(
             winners.items(), key=lambda kv: kv[1]["term_df"]
         )
@@ -1391,7 +1390,7 @@ def topk_bm25_chunked(
             ) < OR_IOPRUNE_MIN_CHUNKS:
                 return None
             return _chunk_ioprune_filter(
-                spark, chunks, winners, strict, heavy_keys, theta,
+                chunks, winners, strict, heavy_keys, theta,
                 cand_sorted, others_ub, n_docs, min_dl, davr,
                 counters=counters, cand_only=cand_only,
             )
@@ -1414,6 +1413,12 @@ def topk_bm25_chunked(
     return _score_topk(
         decoded, docs, n_docs, davr, mode, n_keys, k, round_digits,
         exclude_docs=exclude_docs,
+    )
+
+
+def _empty_topk(spark: SparkSession) -> DataFrame:
+    return local_frame(
+        spark, {"doc_id": [], "score": []}, "doc_id long, score double"
     )
 
 
@@ -1534,16 +1539,7 @@ def facet_counts(
         floor = FACET_AND_PRUNE_MIN_SKIPPABLE if floor is None else int(floor)
         if rare["term_df"] <= DOCLEN_PUSH_CAP and skippable >= floor:
             def rows_for(keys: list[str]) -> DataFrame:
-                wdf = spark.createDataFrame(
-                    [
-                        (k, winners[k]["term"], winners[k]["term_df"])
-                        for k in keys
-                    ],
-                    schema="key string, term string, term_df long",
-                )
-                return _match_keys(
-                    index, {k: 1 for k in keys}, strict
-                ).join(F.broadcast(wdf), ["key", "term"])
+                return _winner_rows(index, winners, keys, strict)
 
             cand = np.sort(
                 np.array(

@@ -44,6 +44,7 @@ from invertedindexbuilder_spark.operators.postings import (
     build_postings,
     build_postings_jvm,
 )
+from invertedindexbuilder_spark.session import local_frame
 from invertedindexbuilder_spark.sources.docs_src import with_url
 
 
@@ -441,21 +442,10 @@ def build(
                 F.sum("df").alias("postings"),
             ).collect()[0]
             iph = {"terms": i["terms"], "postings": i["postings"]}
-        stats_df = spark.createDataFrame(
-            [
-                (
-                    int(dph["rows"]),
-                    int(dph["sum_doc_len"]),
-                    int(iph["terms"]),
-                    int(iph["postings"]),
-                    # min_doc_len: the BM25 block-max upper bound's
-                    # doc_len floor (query_exec.decode_matched_rows_bmw)
-                    int(dph["min_doc_len"]),
-                )
-            ],
-            schema=_STATS_SCHEMA,
-        )
-        cat.write(stats_df, "stats")
+        # min_doc_len: the BM25 block-max upper bound's doc_len floor
+        # (query_exec.decode_matched_rows_bmw)
+        _write_stats(spark, cat, int(dph["rows"]), int(dph["sum_doc_len"]),
+                     iph, int(dph["min_doc_len"]))
         manifest.record("stats", fp, {"wall_s": round(time.time() - t0, 3)})
 
     return manifest.data
@@ -574,9 +564,8 @@ def build_search_tables(
     ).collect()[0]
     counts["n_docs"] = int(dstat["n"])
     cat.write(
-        spark.createDataFrame(
-            [(counts["n_docs"], max_dist, int(dstat["mx"]))],
-            "n_docs long, max_dist int, max_doc_id long",
+        _search_stats_frame(
+            spark, counts["n_docs"], max_dist, int(dstat["mx"])
         ),
         "search_stats",
     )
@@ -713,9 +702,8 @@ def compact_search_tables(
     counts["n_docs_delta"] = delta_docs.select(id_col).distinct().count()
     counts["n_docs"] = n_docs_old + counts["n_docs_delta"]
     phys_stats = f"search_stats.g{gen}"
-    spark.createDataFrame(
-        [(counts["n_docs"], max_dist, max(stored_max, delta_max))],
-        "n_docs long, max_dist int, max_doc_id long",
+    _search_stats_frame(
+        spark, counts["n_docs"], max_dist, max(stored_max, delta_max)
     ).write.mode("overwrite").parquet(os.path.join(out_root, phys_stats))
     orphans = cat.publish(
         {"term_dfs": phys_dfs, "search_stats": phys_stats}
@@ -1152,9 +1140,22 @@ def _write_stats(
     min_doc_len: int,
     table: str = "stats",
 ) -> None:
-    stats_df = spark.createDataFrame(
-        [(n_docs, sum_doc_len, int(m["terms"]), int(m["postings"]),
-          int(min_doc_len))],
-        schema=_STATS_SCHEMA,
+    stats_df = local_frame(
+        spark,
+        {"n_docs": [n_docs], "sum_doc_len": [sum_doc_len],
+         "n_terms": [int(m["terms"])], "n_postings": [int(m["postings"])],
+         "min_doc_len": [int(min_doc_len)]},
+        _STATS_SCHEMA,
     )
     cat.write(stats_df, table)
+
+
+def _search_stats_frame(
+    spark: SparkSession, n_docs: int, max_dist: int, max_doc_id: int
+) -> DataFrame:
+    return local_frame(
+        spark,
+        {"n_docs": [n_docs], "max_dist": [max_dist],
+         "max_doc_id": [max_doc_id]},
+        "n_docs long, max_dist int, max_doc_id long",
+    )

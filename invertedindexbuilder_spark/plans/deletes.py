@@ -57,9 +57,11 @@ from invertedindexbuilder_spark.plans.build import (
     CHUNK_ROW_GROUP_BYTES,
     SEARCH_TABLES,
     BuildManifest,
+    _search_stats_frame,
     _write_stats,
     load_stats,
 )
+from invertedindexbuilder_spark.session import local_frame
 
 TOMBSTONES = "deleted_docs"
 
@@ -73,8 +75,8 @@ def _ids_frame(spark: SparkSession, doc_ids) -> DataFrame:
     if isinstance(doc_ids, DataFrame):
         return doc_ids.select(F.col("doc_id").cast("long"))
     if isinstance(doc_ids, Iterable):
-        return spark.createDataFrame(
-            [(int(i),) for i in doc_ids], schema="doc_id long"
+        return local_frame(
+            spark, {"doc_id": [int(i) for i in doc_ids]}, "doc_id long"
         )
     raise TypeError(f"doc_ids must be a DataFrame or iterable, got {type(doc_ids)}")
 
@@ -371,19 +373,14 @@ def purge_deletes(
         st = cat.read("search_stats").collect()[0].asDict()
         ss_phys = f"search_stats.g{gen}"
         cat.write(
-            spark.createDataFrame(
-                [(n_new, int(st["max_dist"]), n_new - 1)],
-                "n_docs long, max_dist int, max_doc_id long",
-            ),
+            _search_stats_frame(spark, n_new, int(st["max_dist"]), n_new - 1),
             ss_phys,
         )
         publish_map["search_stats"] = ss_phys
 
     # ---- clear tombstones in the SAME flip ----
     tomb_phys = f"{TOMBSTONES}.g{gen}"
-    cat.write(
-        spark.createDataFrame([], schema="doc_id long"), tomb_phys
-    )
+    cat.write(local_frame(spark, {"doc_id": []}, "doc_id long"), tomb_phys)
     orphans = cat.publish(
         {**publish_map, "stats": stats_phys, TOMBSTONES: tomb_phys}
     )

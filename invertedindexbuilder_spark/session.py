@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -20,9 +22,15 @@ def get_spark(
     - Arrow on (all our UDFs are pandas/Arrow batched),
     - shuffle partitions sized to parallelism (overridable; at 100 TB
       this would be thousands and AQE coalesces the small ones).
+
+    ``cores`` defaults to ``SPARK_GRAFT_CPUS`` if set, else the CPUs
+    this process may run on (``os.sched_getaffinity``), so a bare call
+    never oversubscribes the host.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get(
+            "SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))
+        ))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # Python WORKERS inherit sys.path from PYTHONPATH, not from the
@@ -81,3 +89,19 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, columns: dict, schema: str | T.StructType
+) -> DataFrame:
+    """Driver-side values -> an Arrow-backed ``LocalRelation``.
+
+    ``columns`` maps each schema field, in schema order, to a sequence
+    (list or numpy array) of its values.  ``createDataFrame(<python
+    list>)`` would parallelize the rows through Python workers instead:
+    a ``LogicalRDD`` whose every read or broadcast runs a job of
+    ``defaultParallelism`` tasks (about 0.2 s each on 4 cores for a
+    handful of rows).  A ``LocalRelation`` lives in the plan itself, so
+    reading or broadcasting it runs no job.  Every driver-built frame
+    on a serving path goes through here (BENCH/PLANS.md)."""
+    return spark.createDataFrame(pa.table(columns), schema=schema)

@@ -209,3 +209,125 @@ def test_chunk_table_files_are_term_clustered(spark, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
         # disjoint, or touching exactly at one boundary term
         assert hi1 <= lo2 or (hi1 == lo2 and lo1 != lo2), (spans,)
+
+
+def _sql_plans_since(spark, first_id: int) -> list[str]:
+    """Physical plans of every SQL execution with id >= ``first_id``
+    (the SQL status store is live with the UI off)."""
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        ex.apply(i).physicalPlanDescription()
+        for i in range(ex.size())
+        if ex.apply(i).executionId() >= first_id
+    ]
+
+
+def _next_sql_id(spark) -> int:
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((ex.apply(i).executionId() for i in range(ex.size())),
+               default=-1) + 1
+
+
+@pytest.fixture(scope="module")
+def serving(spark, tmp_path_factory):
+    """A needle, a negative-IDF and a positive-IDF heavy term (the
+    shape of test_or_ioprune_pushes_scan_filters), stored as chunk and
+    merged tables, so every pruning branch can be forced."""
+    from invertedindexbuilder_spark.operators.index_build import merge_chunks
+
+    root = tmp_path_factory.mktemp("serving")
+    rows = []
+    for d in range(4000):
+        if d % 2 == 0:
+            rows.append(("stopneg", d, 1 + d % 3))
+        if d % 4 == 0:
+            rows.append(("stoppos", d, 1 + d % 3))
+        if d % 400 == 7:
+            rows.append(("needle", d, 2))
+    postings = spark.createDataFrame(rows, "term string, doc_id long, tf long")
+    encode_chunks(postings, salt_threshold=256, chunk_blocks=1).write.parquet(
+        str(root / "chunks")
+    )
+    merge_chunks(spark.read.parquet(str(root / "chunks"))).write.parquet(
+        str(root / "index")
+    )
+    spark.range(4000).select(
+        F.col("id").alias("doc_id"),
+        (F.lit(50) + F.col("id") % 9).cast("long").alias("doc_len"),
+    ).write.parquet(str(root / "docs"))
+    return {
+        "chunks": spark.read.parquet(str(root / "chunks")),
+        "index": spark.read.parquet(str(root / "index")),
+        "docs": spark.read.parquet(str(root / "docs")),
+        "stats": {"n_docs": 4000, "min_doc_len": 50,
+                  "sum_doc_len": sum(50 + d % 9 for d in range(4000))},
+    }
+
+
+def test_serving_runs_no_python_rdd(spark, serving):
+    """Per-query driver values (query keys, collision winners, pruning
+    candidates, found counts) enter plans as literals or Arrow-backed
+    local relations, never as a Python-parallelized frame: each read of
+    one of those (``Scan ExistingRDD``) is a job of defaultParallelism
+    Python tasks.  Checked on the returned plan AND on every SQL
+    execution the call ran on the driver (lookup metadata, pruning
+    collects), for the lookups, both single-query surfaces with and
+    without forced pruning, and the batch path over both tables."""
+    from invertedindexbuilder_spark.operators.query_batch import (
+        BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF,
+        topk_bm25_batch,
+    )
+    from invertedindexbuilder_spark.operators.query_exec import (
+        topk_bm25,
+        topk_bm25_chunked,
+    )
+    from invertedindexbuilder_spark.session import local_frame
+
+    sv = serving
+    queries = local_frame(
+        spark,
+        {"query_id": [0, 1, 2],
+         "text": ["needle stoppos", "needle needle stopneg", "nothere"]},
+        "query_id long, text string",
+    )
+    calls = {
+        "lookup_chunk_rows": lambda: lookup_chunk_rows(
+            sv["chunks"], ["needle", "stoppos"]),
+        "lookup_index_rows": lambda: lookup_index_rows(
+            sv["index"], ["needle", "stoppos"]),
+    }
+    for name, fn, table in [
+        ("topk_bm25_chunked", topk_bm25_chunked, sv["chunks"]),
+        ("topk_bm25", topk_bm25, sv["index"]),
+    ]:
+        for q in ("needle stoppos", "needle needle stopneg", "nothere"):
+            for mode in ("and", "or"):
+                for forced in (False, True):
+                    calls[f"{name}|{q}|{mode}|{forced}"] = (
+                        lambda fn=fn, table=table, q=q, mode=mode,
+                        forced=forced: fn(
+                            spark, table, sv["docs"], sv["stats"], q,
+                            mode=mode, k=10, or_prune=forced,
+                            and_prune=forced, heavy_df=64,
+                        )
+                    )
+    for table in ("index", "chunks"):
+        for mode in ("and", "or"):
+            calls[f"topk_bm25_batch|{table}|{mode}"] = (
+                lambda table=table, mode=mode: topk_bm25_batch(
+                    spark, sv[table], sv["docs"], sv["stats"], queries,
+                    mode=mode, k=10,
+                )
+            )
+    # force the batch conjunctive candidate path too
+    spark.conf.set(BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF, "0")
+    try:
+        for name, call in calls.items():
+            first = _next_sql_id(spark)
+            df = call()
+            df.collect()
+            assert "ExistingRDD" not in _plan(df), name
+            for plan in _sql_plans_since(spark, first):
+                assert "ExistingRDD" not in plan, (name, plan)
+    finally:
+        spark.conf.unset(BATCH_AND_PRUNE_MIN_SKIPPABLE_CONF)
